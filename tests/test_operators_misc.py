@@ -291,16 +291,59 @@ def test_pruned_dict_lookup_unit(spark, tmp_path):
     assert "Title 0123" in d and d["Title 0123"] == 123
 
 
+def test_dictload_cache_keeps_current_dictionary_only(tmp_path,
+                                                     monkeypatch):
+    """A reused python worker that loads a second run's dictionaries
+    frees the first run's: two paths loaded in a row leave one entry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wikiprep_spark.functions import dictload
+
+    monkeypatch.setattr(dictload, "_CACHE", {})
+    paths = []
+    for run in ("a", "b"):
+        d = tmp_path / run
+        d.mkdir()
+        pq.write_table(pa.table({"kind": ["t"], "k": ["Title " + run],
+                                 "v": ["1"]}), str(d / "part-0.parquet"))
+        paths.append(str(d))
+    first = dictload.load_env_from_parquet(paths[0])
+    assert dictload.load_env_from_parquet(paths[0]) is first
+    second = dictload.load_env_from_parquet(paths[1])
+    assert second[0] == {"Title b": 1}
+    assert list(dictload._CACHE) == [paths[1]]
+
+
 def test_fused_pipeline_equality(spark, tmp_path):
     """The fused two-pass pipeline (no parsed-parquet materialization,
-    JVM-side dup-id scan, prescan-projection parse) must emit the same
-    edges and lineage checksums as the staged pipeline."""
+    JVM-side dup-id scan, prescan-projection parse, parse fused into the
+    transform mapInPandas) must emit the same pages, edges and lineage
+    checksums as the staged pipeline — also on duplicate ids, malformed
+    records and records that share a seq key."""
     from wikiprep_spark.plans.pipeline import run_pipeline
-    from wikiprep_spark.sources.corpus import build_src_pages
+    from wikiprep_spark.sources.corpus import _row, build_src_pages
 
+    def rec(repo, path, page_id, title, text):
+        return (repo, path, "c0", "wikitext", _row(page_id, title, text)[4])
+
+    injected = spark.createDataFrame([
+        # id 9001 twice: the later seq ("~" sorts last) loses
+        rec("!dup", "a.xml", 9001, "Dup Early", "early [[Dup Late]]"),
+        rec("~dup", "z.xml", 9001, "Dup Late", "late [[Dup Early]]"),
+        # malformed record (unterminated <page>): a parse error, dropped
+        ("!bad", "m.xml", "c0", "wikitext",
+         "<page><title>Broken</title><id>9002</id>"),
+        # two records share one seq; only the one whose id also appears
+        # at an EARLIER seq loses, the other stays
+        rec("wiki/same", "s.xml", 9003, "Shared A", "shared a"),
+        rec("wiki/same", "s.xml", 9004, "Shared B", "shared b"),
+        rec("!first", "f.xml", 9004, "Shared B First", "first b"),
+    ], "repo string, path string, commit string, lang string, "
+       "content string")
     src_dir = str(tmp_path / "src")
     build_src_pages(spark, "/root/testdata/sf0.001", limit=60) \
-        .repartition(3).write.parquet(src_dir)
+        .unionByName(injected).repartition(3).write.parquet(src_dir)
     src = spark.read.parquet(src_dir)
 
     staged = run_pipeline(spark, src, work_dir=str(tmp_path / "w1"),
@@ -314,6 +357,18 @@ def test_fused_pipeline_equality(spark, tmp_path):
         assert a == b and a, table
     assert fused["_counts"]["transformed"] == staged["transformed"].count()
     assert fused["_counts"]["triples"] == staged["triples"].count()
+    pages = {}
+    for name, res in (("staged", staged), ("fused", fused)):
+        pages[name] = sorted(
+            tuple(r) for r in res["transformed"]
+            .select("page_id", "title", "status", "content_sha256").collect())
+    assert pages["fused"] == pages["staged"]
+    titles = {(pid, t) for pid, t, _, _ in pages["fused"]}
+    assert (9001, "Dup Early") in titles and (9001, "Dup Late") not in titles
+    assert not any(pid == 9002 for pid, _ in titles)
+    assert (9003, "Shared A") in titles
+    assert (9004, "Shared B First") in titles
+    assert (9004, "Shared B") not in titles
     # lineage totals (rows, content checksum AND byte_count — all three
     # sum the same raw-record quantities) agree across modes even though
     # partition boundaries may differ
@@ -323,6 +378,31 @@ def test_fused_pipeline_equality(spark, tmp_path):
                    F.sum("byte_count")).first()
         return tuple(r)
     assert totals("w1") == totals("w2")
+
+
+def test_pipeline_joins_lineage_writer_on_failure(spark, tmp_path,
+                                                  monkeypatch):
+    """A failing transform must not return while the overlapped lineage
+    writer is still writing into work_dir: run_pipeline joins it before
+    the transform's error propagates."""
+    import os
+
+    from wikiprep_spark.plans import pipeline
+    from wikiprep_spark.sources.corpus import static_rows
+
+    src = spark.createDataFrame(
+        static_rows(), "repo string, path string, commit string, "
+        "lang string, content string")
+
+    def failing_transform(*args):
+        raise RuntimeError("transform failed")
+
+    monkeypatch.setattr(pipeline, "transform_src_pages", failing_transform)
+    wd = str(tmp_path / "work")
+    with pytest.raises(RuntimeError, match="transform failed"):
+        pipeline.run_pipeline(spark, src, work_dir=wd, resume=False,
+                              fuse_parse=True)
+    assert os.path.exists(os.path.join(wd, "lineage", "_SUCCESS"))
 
 
 def test_pipeline_resume_skips_finished_stages(spark, tmp_path):

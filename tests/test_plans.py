@@ -33,3 +33,35 @@ def test_lsh_self_join_reuses_exchange(spark):
         "post-AQE final plan lost the (band,bucket) exchange reuse — "
         "the signature chain would recompute per self-join side"
     )
+
+
+
+def test_fused_transform_single_python_pass(spark, tmp_path):
+    """Pass 2 of the fused pipeline parses, drops duplicate-id losers and
+    runs the markup kernel in ONE python worker per task: its plan holds
+    exactly one MapInPandas (the staged chain — parse, anti join,
+    transform — holds two)."""
+    from wikiprep_spark.operators.prescan import (
+        dup_losers_from_src,
+        live_pages,
+    )
+    from wikiprep_spark.operators.transform import (
+        transform_pages,
+        transform_src_pages,
+    )
+    from wikiprep_spark.sources.corpus import static_rows
+    from wikiprep_spark.sources.pages import parse_pages
+
+    src = spark.createDataFrame(
+        static_rows(), "repo string, path string, commit string, "
+        "lang string, content string")
+    losers = dup_losers_from_src(src)
+    dicts = str(tmp_path / "dicts")
+
+    def n_python(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("MapInPandas")
+
+    assert n_python(transform_src_pages(src, losers, dicts)) == 1
+    assert n_python(
+        transform_pages(live_pages(parse_pages(src), losers), dicts)) == 2

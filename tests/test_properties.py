@@ -129,3 +129,29 @@ def test_media_decoders_total_with_magic_prefixes(payload):
             assert out is None or isinstance(out, dict)
         except multimodal._CORRUPT_ERRORS:
             pass
+
+
+# brace-heavy strings: the scanners' state changes only on these symbols
+_markup = st.text(alphabet="{}[]| =a\n\t", max_size=120)
+
+
+@given(_markup)
+@settings(max_examples=2000, deadline=None)
+def test_split_on_templates_matches_char_scanner(text):
+    """The brace-position scanner keeps every quirk of the reference's
+    character-at-a-time C scanner (the opener's second '{' counts toward
+    depth; an unterminated '{{' stays in the trailing text)."""
+    from tests.tmplscan_oracle import split_on_templates_chars
+    from wikiprep_spark.functions.tmplscan import split_on_templates
+
+    assert split_on_templates(text) == split_on_templates_chars(text)
+
+
+@given(_markup)
+@settings(max_examples=2000, deadline=None)
+def test_split_template_invocation_matches_char_scanner(text):
+    from tests.tmplscan_oracle import split_template_invocation_chars
+    from wikiprep_spark.functions.tmplscan import split_template_invocation
+
+    assert (split_template_invocation(text)
+            == split_template_invocation_chars(text))

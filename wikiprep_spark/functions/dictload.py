@@ -14,14 +14,18 @@ from __future__ import annotations
 import glob
 import os
 
+# path -> env of the current dictionary only: a reused python worker that
+# moves on to another run's dictionaries frees the earlier ones first
 _CACHE: dict = {}
 
 
 def load_env_from_parquet(path: str):
     """Load (title2id, redir, template_bodies) dicts from the tagged
-    dictionary parquet directory. Cached per worker process."""
+    dictionary parquet directory. Cached per worker process (the latest
+    path only)."""
     if path in _CACHE:
         return _CACHE[path]
+    _CACHE.clear()
     import pyarrow.parquet as pq
 
     t2i: dict = {}
@@ -164,6 +168,7 @@ def load_env_pruned(path: str):
     pages only) stay a plain in-memory dict."""
     if path in _CACHE:
         return _CACHE[path]
+    _CACHE.clear()
     import pyarrow.parquet as pq
 
     t2i = RowGroupPrunedDict(os.path.join(path, "title2id"))

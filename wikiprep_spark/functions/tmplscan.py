@@ -17,6 +17,8 @@ from __future__ import annotations
 import re
 
 _ASCII_WS = " \t\n\r\f\v"
+_BRACE_RE = re.compile(r"[{}]")
+_PIPE_OR_NEST_RE = re.compile(r"[|{}\[\]]")
 
 
 def split_on_templates(text: str) -> list:
@@ -28,49 +30,37 @@ def split_on_templates(text: str) -> list:
     Mirrors the C scanner semantics exactly, including the quirk that the
     second '{' of the opener bumps the depth counter, so termination needs
     a '}}' with all inner braces (and the opener's own second '{') closed.
+
+    Only brace positions change the scanner state, so the scan jumps from
+    one brace to the next (``str.find`` for the opener, a compiled
+    character-class ``finditer`` inside an invocation) instead of stepping
+    through every character.
     """
-    if text == "":
-        return [""]
-    n = len(text)
     out = []
-    text_start = 0
-    prev = 0
-    cur = 1
+    text_start = pos = 0
+    find = text.find
     while True:
-        # search for the '{{' opener
-        while not (
-            cur < n and text[prev] == "{" and text[cur] == "{"
-        ):
-            if cur >= n:
-                out.append(text[text_start:])
-                return out
-            prev = cur
-            cur += 1
-        template_start = cur + 1
+        opener = find("{{", pos)
+        if opener == -1:
+            break
         depth = 0
-        # scan for '}}' at depth 0
-        while True:
-            if cur < n and (
-                text[prev] == "}" and text[cur] == "}" and depth == 0
-            ):
-                break
-            if cur >= n:
-                out.append(text[text_start:])
-                return out
-            c = text[cur]
-            if c == "{":
+        # starts AT the opener's second '{' (the C scanner's depth quirk)
+        for m in _BRACE_RE.finditer(text, opener + 1):
+            i = m.start()
+            if text[i] == "{":
                 depth += 1
-            elif c == "}":
-                if depth > 0:
-                    depth -= 1
-            prev = cur
-            cur += 1
-        text_end = template_start - 2
-        out.append(text[text_start:text_end])
-        out.append(text[template_start:prev])
-        text_start = cur + 1
-        prev = cur
-        cur += 1
+            elif depth:
+                depth -= 1
+            elif text[i - 1] == "}":
+                # '}}' at depth 0: text[i - 1] is a '}' already seen here
+                out.append(text[text_start:opener])
+                out.append(text[opener + 2:i - 1])
+                text_start = pos = i + 1
+                break
+        else:
+            break  # unterminated: the '{{' stays in the trailing text
+    out.append(text[text_start:])
+    return out
 
 
 def split_template_invocation(invocation: str) -> list:
@@ -79,25 +69,27 @@ def split_template_invocation(invocation: str) -> list:
     yields an empty list."""
     if invocation == "":
         return []
+    if "{" not in invocation and "[" not in invocation:
+        # nothing can nest: every '|' separates
+        return [f.strip(_ASCII_WS) for f in invocation.split("|")]
     params = []
-    brace = 0
-    square = 0
-    start = 0
-    for i, c in enumerate(invocation):
+    brace = square = start = 0
+    for m in _PIPE_OR_NEST_RE.finditer(invocation):
+        i = m.start()
+        c = invocation[i]
         if c == "|":
-            if brace == 0 and square == 0:
+            if not brace and not square:
                 params.append(invocation[start:i].strip(_ASCII_WS))
                 start = i + 1
         elif c == "{":
             brace += 1
-        elif c == "}":
-            if brace > 0:
-                brace -= 1
         elif c == "[":
             square += 1
-        elif c == "]":
-            if square > 0:
-                square -= 1
+        elif c == "}":
+            if brace:
+                brace -= 1
+        elif square:
+            square -= 1
     params.append(invocation[start:].strip(_ASCII_WS))
     return params
 

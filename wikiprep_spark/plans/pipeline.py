@@ -26,7 +26,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from wikiprep_spark.operators import edges as edge_ops
 from wikiprep_spark.operators import prescan as prescan_ops
-from wikiprep_spark.operators.transform import transform_pages
+from wikiprep_spark.operators.transform import (
+    transform_pages,
+    transform_src_pages,
+)
 from wikiprep_spark.sources.pages import parse_pages, parse_pages_prescan
 
 EDGE_BUILDERS = {
@@ -139,10 +142,14 @@ def run_pipeline(
     ``fuse_parse=True`` (work_dir mode) adopts the reference's own two-pass
     architecture (bin/wikiprep prescan pass + transform pass over the same
     dump): the XML parse is NOT materialized to parquet — pass 1 parses in
-    flight and aggregates the dictionaries, pass 2 re-parses fused with the
-    transform kernel in one python chain.  Re-parsing costs ~10%% of the
-    transform kernel and removes an entire columnar encode+decode round
-    trip of the full text, which is the right trade at scale.
+    flight and aggregates the dictionaries; pass 2 is ONE mapInPandas per
+    source record (transform_src_pages) that re-parses, drops parse errors
+    and duplicate-id losers (carried in by a broadcast join against the
+    JVM-side loser set) and runs the markup kernel.  Each transform task
+    thus keeps one python worker hot, and the session gives every core a
+    task slot (plans/session.py).  Re-parsing costs a small fraction of the
+    kernel and removes an entire columnar encode+decode round trip of the
+    full text, which is the right trade at scale.
 
     Returns a dict of DataFrames: parsed, transformed, every edge table,
     redirect_records, template_index, triples, plus the collected metrics
@@ -174,7 +181,6 @@ def run_pipeline(
         # that consumes live_pages (measured as a full extra parse pass
         # in both the prescan and transform jobs)
         losers = prescan_ops.dup_losers_from_src(src_pages).persist()
-        live = prescan_ops.live_pages(parsed, losers)
         # the dictionary aggregation reads text only for template pages —
         # parse with the prescan projection so the pass doesn't Arrow-ship
         # every page's full text back to the JVM
@@ -266,54 +272,66 @@ def run_pipeline(
                 target=_lineage_job, daemon=True)
             lineage_thread.start()
 
-    # --- stage 3: transform
-    t0 = time.time()
-    if work_dir:
-        transformed_path = os.path.join(work_dir, "transformed_pages")
-        if not (resume and _stage_done(transformed_path)):
-            counts["transformed"] = _write(
-                transform_pages(live, dicts_path), transformed_path
-            )
-        transformed = spark.read.parquet(transformed_path)
-    else:
-        transformed = transform_pages(live, dicts_path)
-        if persist:
-            transformed = transformed.persist()
-    metrics.record("transform", time.time() - t0)
-
-    # --- stages 4/5: edge tables (lazy projections of the wide table)
-    for name, builder in EDGE_BUILDERS.items():
-        out[name] = builder(transformed)
-
-    # redirect records: distributed output join against the cached title
-    # aggregate (Output/Composite.pm:83-125); both dimension sides broadcast
-    redirect_records, template_redirects = prescan_ops.redirect_records_df(
-        redirects, title2id, template_bodies
-    )
-    out["redirect_records"] = redirect_records
-    out["template_redirects"] = template_redirects
-    out["template_index"] = template_index
-
-    # single-scan triple derivation (edge tables above remain available as
-    # pruned per-kind projections; triples_view is the 8-pass equivalent)
-    out["triples"] = edge_ops.triples_from_transformed(
-        transformed, redirect_records
-    )
-
-    if work_dir:
+    # the lineage writer is joined on every exit: an exception in the
+    # transform or triples stage must not leave it writing into work_dir
+    finished = False
+    try:
+        # --- stage 3: transform
         t0 = time.time()
-        triples_path = os.path.join(work_dir, "triples")
-        if not (resume and _stage_done(triples_path)):
-            # partitioned by predicate: partition pruning for per-edge reads
-            counts["triples"] = _write(out["triples"], triples_path,
-                                       partition_by="pred")
-        out["triples"] = spark.read.parquet(triples_path)
-        metrics.record("triples", time.time() - t0)
+        if fuse_parse:
+            # parse, dup-id drop and kernel in ONE mapInPandas per record
+            transformed = transform_src_pages(src_pages, losers, dicts_path)
+        else:
+            transformed = transform_pages(live, dicts_path)
+        if work_dir:
+            transformed_path = os.path.join(work_dir, "transformed_pages")
+            if not (resume and _stage_done(transformed_path)):
+                counts["transformed"] = _write(transformed, transformed_path)
+            transformed = spark.read.parquet(transformed_path)
+        elif persist:
+            transformed = transformed.persist()
+        metrics.record("transform", time.time() - t0)
 
+        # --- stages 4/5: edge tables (lazy projections of the wide table)
+        for name, builder in EDGE_BUILDERS.items():
+            out[name] = builder(transformed)
+
+        # redirect records: distributed output join against the cached
+        # title aggregate (Output/Composite.pm:83-125); both dimension
+        # sides broadcast
+        redirect_records, template_redirects = (
+            prescan_ops.redirect_records_df(
+                redirects, title2id, template_bodies))
+        out["redirect_records"] = redirect_records
+        out["template_redirects"] = template_redirects
+        out["template_index"] = template_index
+
+        # single-scan triple derivation (edge tables above remain available
+        # as pruned per-kind projections; triples_view is the 8-pass
+        # equivalent)
+        out["triples"] = edge_ops.triples_from_transformed(
+            transformed, redirect_records
+        )
+
+        if work_dir:
+            t0 = time.time()
+            triples_path = os.path.join(work_dir, "triples")
+            if not (resume and _stage_done(triples_path)):
+                # partitioned by predicate: partition pruning for per-edge
+                # reads
+                counts["triples"] = _write(out["triples"], triples_path,
+                                           partition_by="pred")
+            out["triples"] = spark.read.parquet(triples_path)
+            metrics.record("triples", time.time() - t0)
+        finished = True
+    finally:
         if lineage_thread is not None:
             lineage_thread.join()
-            if lineage_err:
+            # a lineage failure surfaces unless another error is already
+            # propagating (that one is the cause worth reporting)
+            if lineage_err and finished:
                 raise lineage_err[0]
+    if work_dir:
         metrics.save(os.path.join(work_dir, "metrics.jsonl"))
 
     out["parsed"] = parsed

@@ -18,47 +18,22 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """One task slot per core (``spark.task.cpus`` stays at Spark's
+    default of 1).  Each python-heavy stage keeps ONE python worker hot
+    per task — the fused transform parses and runs the markup kernel in
+    a single mapInPandas — so one worker per core is the kernel's
+    parallelism.  ``SPARK_GRAFT_CPUS`` sizes ``local[k]`` (default: all
+    cores); ``SPARK_GRAFT_DRIVER_MEM`` sets the driver memory."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
 
-    # Every pandas-UDF task keeps TWO threads hot (the python worker and
-    # the JVM side feeding it Arrow batches); budget 2 cpus per task so
-    # hot threads ~= cores at any local[k] — the same 2-cores-per-task
-    # sizing a production executor uses for python-heavy stages.  (An
-    # earlier round additionally capped slots at ~8 per JVM beyond 16
-    # cores; re-measured round 6 with interleaved clean-window A/Bs:
-    # 16 slots beat 8 by ~17% on the python transform stage and 10-20%
-    # on the JVM-heavy pair joins, so the extra cap is gone.)
-    task_cpus = 1
-    if master.startswith("local["):
-        try:
-            k = int(master[len("local["):-1].rstrip("*") or os.cpu_count())
-        except ValueError:
-            k = os.cpu_count() or 8
-        if k >= 2:
-            task_cpus = 2
-    elif master.startswith("local-cluster["):
-        # [n_executors, cores_per_executor, mem_mb]: budget 2 cpus per
-        # task within each executor JVM so each executor keeps
-        # cores/2 python workers + their JVM Arrow feeders ~= cores
-        # hot threads — the same sizing a production executor uses
-        try:
-            cores_per_exec = int(
-                master[len("local-cluster["):-1].split(",")[1]
-            )
-        except (ValueError, IndexError):
-            cores_per_exec = 2
-        if cores_per_exec >= 2:
-            task_cpus = 2
-
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.task.cpus", str(task_cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

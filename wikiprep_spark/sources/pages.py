@@ -35,10 +35,18 @@ PARSED_SCHEMA = (
 )
 
 
-def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
+PARSED_COLUMNS = [
+    "seq", "page_id", "title", "title_norm", "ns", "timestamp", "text",
+    "content_sha256", "redirect_target", "ns_ok_prescan", "is_template",
+    "parse_error", "text_chars", "record_chars",
+]
+
+
+def _parse_rows(batch: pd.DataFrame) -> Iterator[tuple]:
+    """One parsed-page tuple (PARSED_COLUMNS order) per src_pages record
+    of ``batch``, in input order."""
     site = ENWIKI
     tmpl_prefix = site.template_namespace + ":"
-    rows = []
     for repo, path, commit, content in zip(
         batch["repo"], batch["path"], batch["commit"], batch["content"]
     ):
@@ -49,43 +57,35 @@ def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
             # content_sha256 is still the sha of the raw record so the
             # lineage checksum stays comparable with the JVM-side
             # sha2(content) even on dirty dumps
-            rows.append(
-                (seq, None, None, None, None, None, None,
-                 sha256_hex(content), None, False, False, str(exc), 0,
-                 len(content))
-            )
+            yield (seq, None, None, None, None, None, None,
+                   sha256_hex(content), None, False, False, str(exc), 0,
+                   len(content))
             continue
         title_norm = normalize_title(rec["title"], None, site)
         ns = page_namespace(rec["title"])
         redirect = parse_redirect(rec["text"])
         if redirect is not None:
             redirect = normalize_title(redirect, None, site)
-        rows.append(
-            (
-                seq,
-                rec["id"],
-                rec["title"],
-                title_norm,
-                ns,
-                rec["timestamp"],
-                rec["text"],
-                rec["sha256"],
-                redirect,
-                is_namespace_ok(ns, site.ok_prescan, site),
-                title_norm.startswith(tmpl_prefix),
-                None,
-                len(rec["text"] or ""),
-                len(content),
-            )
+        yield (
+            seq,
+            rec["id"],
+            rec["title"],
+            title_norm,
+            ns,
+            rec["timestamp"],
+            rec["text"],
+            rec["sha256"],
+            redirect,
+            is_namespace_ok(ns, site.ok_prescan, site),
+            title_norm.startswith(tmpl_prefix),
+            None,
+            len(rec["text"] or ""),
+            len(content),
         )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "seq", "page_id", "title", "title_norm", "ns", "timestamp",
-            "text", "content_sha256", "redirect_target", "ns_ok_prescan",
-            "is_template", "parse_error", "text_chars", "record_chars",
-        ],
-    )
+
+
+def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
+    return pd.DataFrame(list(_parse_rows(batch)), columns=PARSED_COLUMNS)
 
 
 def sample_pages(src_pages: DataFrame, fraction: float,
